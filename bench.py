@@ -402,7 +402,7 @@ def stored_epoch_time(spark, n: int, reps: int = 2) -> float:
     td = tempfile.mkdtemp(prefix="bench_stored_frontier_")
     eng = CrawlEngine(
         spark, urls(spark.range(0)).limit(0),
-        frontier_store_dir=td, pop_impl="threshold",
+        frontier_store_dir=td,
     )
     stored = eng._store_frontier(0, urls(spark.range(0, n, 1, SHUFFLE_PARTITIONS)))
     url_seen = urls(spark.range(0, n, 3, SHUFFLE_PARTITIONS)).select(

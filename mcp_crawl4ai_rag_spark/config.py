@@ -58,7 +58,3 @@ DEFAULT_SALT_LANES = 16
 
 # Bloom filter defaults for the URL-seen pre-filter (north_star).
 BLOOM_FPP = 0.01
-# Below this many seen URLs the exact anti-join is cheaper than building and
-# broadcasting a bloom (two extra Python stages); the pre-filter only pays
-# once the seen side is large enough to dominate the join shuffle.
-BLOOM_MIN_SEEN = 65536

@@ -192,28 +192,33 @@ class ShardedBloom:
     n_shards: int
 
     def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        # Single-gather probe over the CONCATENATED shard bitsets: shard s
-        # occupies bytes [s*bpp, (s+1)*bpp), so the global byte index is
-        # s*bpp + (in-shard bit >> 3) — one vectorized fancy-index for the
-        # whole batch. The earlier per-shard mask/gather/scatter loop cost
-        # ~2x the whole frontier epoch at 256M URLs (BENCH/
-        # bench_r5_ladder_deep.jsonl, 214.7s vs 117.7s monolithic); this
-        # path prices the sharded probe the same as the monolithic one.
-        h = hashes.astype(np.int64)
-        if len(h) == 0:
-            return np.zeros(0, dtype=bool)
-        flat = getattr(self, "_flat", None)
-        if flat is None or len(flat) != len(self.shards[0].bits) * self.n_shards:
-            flat = np.concatenate([bf.bits for bf in self.shards])
-            self._flat = flat
-        m, k = self.shards[0].m, self.shards[0].k
-        bpp = len(self.shards[0].bits)
-        # numpy's floored mod == Spark pmod for positive modulus
-        shard_of = np.mod(h, self.n_shards).astype(np.int64)
-        idx = _indices(h, m, k)  # (k, n) bit positions within the shard
-        byte_idx = (idx >> 3) + shard_of * bpp  # broadcasts over the k rows
-        bit = (flat[byte_idx] >> (idx & 7).astype(np.uint8)) & 1
-        return bit.all(axis=0)
+        # concatenated per call: the shards stay mutable (add_hashes ORs
+        # in place), so a cached copy would answer with stale bits
+        flat = np.concatenate([bf.bits for bf in self.shards])
+        s0 = self.shards[0]
+        return _probe_sharded_flat(
+            flat, hashes, s0.m, s0.k, self.n_shards, len(s0.bits)
+        )
+
+
+def _probe_sharded_flat(
+    flat: np.ndarray, hashes: np.ndarray, m: int, k: int, n_shards: int, bpp: int
+) -> np.ndarray:
+    """Sharded-bloom membership over the CONCATENATED shard bitsets: shard s
+    occupies bytes [s*bpp, (s+1)*bpp), so the global byte index is
+    s*bpp + (in-shard bit >> 3) — one vectorized fancy-index for the whole
+    batch. The earlier per-shard mask/gather/scatter loop cost ~2x the whole
+    frontier epoch at 256M URLs (BENCH/bench_r5_ladder_deep.jsonl, 214.7s vs
+    117.7s monolithic); this prices the sharded probe like the monolithic."""
+    h = hashes.astype(np.int64)
+    if len(h) == 0:
+        return np.zeros(0, dtype=bool)
+    # numpy's floored mod == Spark pmod for positive modulus
+    shard_of = np.mod(h, n_shards).astype(np.int64)
+    idx = _indices(h, m, k)  # (k, n) bit positions within the shard
+    byte_idx = (idx >> 3) + shard_of * bpp  # broadcasts over the k rows
+    bit = (flat[byte_idx] >> (idx & 7).astype(np.uint8)) & 1
+    return bit.all(axis=0)
 
 
 def build_bloom_sharded(
@@ -272,8 +277,7 @@ def bloom_maybe_contains(bloom: "BloomFilter | ShardedBloom", hash_col: Column) 
     Accepts the monolithic filter or the sharded one (probe routes each hash
     to its shard's bitset)."""
     if isinstance(bloom, ShardedBloom):
-        # Ship ONE concatenated bitset and probe it with the same
-        # single-gather arithmetic as ShardedBloom.contains_hashes —
+        # Ship ONE concatenated bitset (snapshotted here, at plan time) —
         # frombuffer per Arrow batch is zero-copy, and no per-batch shard
         # reconstruction or per-shard routing loop survives in the hot path.
         flat_payload = b"".join(bf.bits.tobytes() for bf in bloom.shards)
@@ -283,14 +287,11 @@ def bloom_maybe_contains(bloom: "BloomFilter | ShardedBloom", hash_col: Column) 
         @F.pandas_udf(BooleanType())
         def _probe_sharded(h: pd.Series) -> pd.Series:
             flat = np.frombuffer(flat_payload, dtype=np.uint8)
-            hv = h.to_numpy(dtype=np.int64)
-            if len(hv) == 0:
-                return pd.Series(np.zeros(0, dtype=bool))
-            shard_of = np.mod(hv, n_shards).astype(np.int64)
-            idx = _indices(hv, m, k)
-            byte_idx = (idx >> 3) + shard_of * bpp
-            bit = (flat[byte_idx] >> (idx & 7).astype(np.uint8)) & 1
-            return pd.Series(bit.all(axis=0))
+            return pd.Series(
+                _probe_sharded_flat(
+                    flat, h.to_numpy(dtype=np.int64), m, k, n_shards, bpp
+                )
+            )
 
         return _probe_sharded(hash_col)
 

@@ -4,12 +4,19 @@ Re-expresses the reference's ``crawl_recursive_internal_links``
 (src/crawl4ai_mcp.py:955-1067) as a driver-side epoch loop over DataFrame
 operations (the Pregel pattern):
 
-    seeds → [epoch: binary-filter → bloom+anti-join URL-seen (J1)
-             → politeness pop (J4, salted) → mark visited AT SCHEDULE TIME
+    seeds → [epoch: binary-filter → politeness pop (J4, salted)
+             → mark visited AT SCHEDULE TIME
              → robots gate (D4) → fetch-join corpus (S1/S2)
              → success filter (F11) → link explode + resolve (F7)
-             → boundary filters (F1/F4/F5/F6) → next-level anti-join (J2)
+             → boundary filters (F1/F4/F5/F6) → URL-seen anti-join (J2)
              → seq assignment → union frontier (U1) → snapshot (S7)] × depth
+
+URL-seen membership is checked ONCE per epoch, at discovery (J2): every
+row that enters the frontier is already disjoint from ``url_seen`` —
+discoveries pass J2 after the epoch's batch joined ``url_seen``, deferred
+and cap-squeezed rows were popped from that disjoint frontier but never
+entered ``url_seen``, and seeds start against an empty set — so the
+reference's schedule-time check (J1, :980-1004) could never drop a row.
 
 Semantics faithfully reproduced from the reference:
 - URLs are marked visited when *scheduled*, not on completion
@@ -48,7 +55,6 @@ from pyspark.sql import functions as F
 
 from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
 
-from ..config import BLOOM_MIN_SEEN, DEFAULT_SALT_LANES
 from ..functions.urls import (
     canonical_url,
     comparison_normalize,
@@ -72,8 +78,11 @@ from ..operators.politeness import (
     robots_denied_wildcard_expr,
     update_backoff,
 )
-from ..operators.urlseen import anti_join_seen, build_bloom
+from ..operators.urlseen import anti_join_seen
 from ..sources.checkpoint import CheckpointManager
+
+# Bucket count of the stored frontier table (CrawlEngine frontier_store_dir).
+FRONTIER_STORE_BUCKETS = 16
 
 _FRONTIER_COLS = ["canonical_url", "url_hash", "host", "path", "depth", "priority", "seq"]
 _URL_SEEN_SCHEMA = (
@@ -108,6 +117,34 @@ def _union_all(spark: SparkSession, parts: list[DataFrame], schema: str) -> Data
     return out
 
 
+def _observed_count(obs: Observation) -> int:
+    """The ``n`` metric of a count Observation, or 0 when it never reported:
+    adaptive execution replaces a join whose input stage materialized EMPTY
+    with an empty relation, and the observation inside that stage is
+    dropped with it."""
+    return int(obs.get["n"]) if obs._jo.getRow().length() else 0
+
+
+def _fold_counts(counter: DataFrame, rows: DataFrame, key_expr) -> DataFrame:
+    """Fold the per-key row counts of ``rows`` into a (key, scheduled)
+    counter — a |keys|-row table updated incrementally, never a
+    re-aggregation of the full url_seen. Checkpointed: the counter is
+    broadcast into every later epoch's plan."""
+    key = counter.columns[0]
+    delta = rows.groupBy(key_expr.alias(key)).agg(F.count(F.lit(1)).alias("__d"))
+    return (
+        counter.join(delta, key, "full")
+        .select(
+            key,
+            (
+                F.coalesce(F.col("scheduled"), F.lit(0))
+                + F.coalesce(F.col("__d"), F.lit(0))
+            ).alias("scheduled"),
+        )
+        .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+    )
+
+
 class CrawlEngine:
     """Frontier + fetch scheduler over a corpus DataFrame.
 
@@ -119,8 +156,14 @@ class CrawlEngine:
     allowed_host_suffix : discovered links must have a host with this suffix
         (crawl boundary for multi-host crawls; single-host boundaries come
         from ``prefix``).
-    use_bloom : bloom-prefilter the URL-seen anti-join (north_star).
     checkpoint_dir : per-epoch snapshot directory; enables resume().
+    epoch_seconds : politeness epoch length (budget = epoch / host delay).
+    url_scorer, link_filter, redirects, template_guard_cap : discovery
+        hooks, documented where ``__init__`` stores them.
+    frontier_store_dir : persist each epoch's frontier as a host-bucketed
+        table and pop it with the threshold pop; unset = in-memory frontier
+        popped with the two-phase pop (see ``run``).
+    politeness_grain : "host" or "domain" (eTLD+1) politeness and quota key.
     """
 
     def __init__(
@@ -130,25 +173,19 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         *,
         allowed_host_suffix: str | None = None,
-        use_bloom: bool = True,
-        salt_lanes: int = DEFAULT_SALT_LANES,
         checkpoint_dir: str | None = None,
         epoch_seconds: float | None = None,
-        pop_impl: str = "twophase",
         url_scorer=None,
         link_filter=None,
         redirects=None,
         template_guard_cap=None,
         frontier_store_dir: str | None = None,
-        frontier_store_buckets: int = 16,
         politeness_grain: str = "host",
     ):
         self.spark = spark
         self.pages = pages
         self.robots = robots
         self.allowed_host_suffix = allowed_host_suffix
-        self.use_bloom = use_bloom
-        self.salt_lanes = salt_lanes
         self.ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
         self.epoch_seconds = epoch_seconds
         # Best-first hook (crawl4ai BestFirstCrawlingStrategy's url_scorer):
@@ -205,27 +242,13 @@ class CrawlEngine:
         # the counter is rebuilt once from the checkpointed url_seen.
         # ``None`` (default) = behavior unchanged.
         self.template_guard_cap = template_guard_cap
-        # "twophase" (default): salted two-phase window pop — the measured
-        # local/wall-clock winner (interleaved paired A/B, BENCH/
-        # bench_r3_ab_pairs_postfix.json: median twophase/threshold 0.51)
-        # because its exchanges double as materialization (shuffle-file
-        # reuse feeds the popped/deferred dual read for free), while the
-        # threshold pop's DAG must pay an explicit localCheckpoint.
-        # "threshold": zero wide-row-shuffle pop — 0.31x the epoch's total
-        # shuffled bytes under full-width materialization (~8.6x fewer on
-        # the pop's own exchanges; BENCH/bench_r3_pop_shuffle_bytes.json,
-        # consumer="noop" cells); the right shape when the frontier is
-        # popped from a STORED table (Iceberg scan = free materialization)
-        # or when shuffle crosses a real network instead of one box's bus.
-        if pop_impl not in ("twophase", "threshold"):
-            raise ValueError(f"pop_impl must be twophase|threshold, got {pop_impl!r}")
-        self.pop_impl = pop_impl
         # STORED-FRONTIER mode (the 10^10 cluster shape, executed): with
         # ``frontier_store_dir`` set, each epoch's frontier is persisted as
-        # a parquet table BUCKETED BY host (sorted by the pop order inside
-        # each bucket) and the epoch reads it back as a table scan. This is
-        # the deployment claim made concrete in-sandbox (Iceberg stands in
-        # as bucketed parquet, README Iceberg note):
+        # a parquet table BUCKETED BY host (FRONTIER_STORE_BUCKETS buckets,
+        # sorted by the pop order inside each) and the epoch reads it back
+        # as a table scan. This is the deployment claim made concrete
+        # in-sandbox (Iceberg stands in as bucketed parquet, README Iceberg
+        # note):
         #   * the threshold pop's dual read (narrow ranking branch + wide
         #     filter branch) becomes two COLUMN-PRUNED scans of one table —
         #     no localCheckpoint, no full-width materialization, no
@@ -241,7 +264,6 @@ class CrawlEngine:
         # __spark_entry__ crawl_bfs_visited 'stored' + politeness_drain
         # 'stored' legs share the in-memory legs' oracles).
         self.frontier_store_dir = frontier_store_dir
-        self.frontier_store_buckets = frontier_store_buckets
         # Politeness GRAIN: "host" throttles per hostname (the reference's
         # RateLimiter grain); "domain" throttles per registrable domain
         # (eTLD+1 via functions/urls.registrable_domain) — the grain real
@@ -320,7 +342,7 @@ class CrawlEngine:
         (
             frontier.select(*_FRONTIER_COLS)
             .write.format("parquet")
-            .bucketBy(self.frontier_store_buckets, "host")
+            .bucketBy(FRONTIER_STORE_BUCKETS, "host")
             .sortBy("depth", "priority", "seq")
             .mode("overwrite")
             .option("path", os.path.join(self.frontier_store_dir, f"ep{epoch}"))
@@ -591,37 +613,27 @@ class CrawlEngine:
         observed_fetch: dict[int, dict[str, int]] = {}
         epochs_run = start_epoch
 
-        host_counts = None  # (host, scheduled) — only when quota'd
-        # quota grain matches the politeness grain: under "domain" the
+        # Scheduled-count counters, folded from each popped batch; a resume
+        # rebuilds them once by folding the checkpointed url_seen. The
+        # quota key follows the politeness grain: under "domain" the
         # counter keys by registrable domain (max_pages_per_host reads as
-        # max pages per DOMAIN), so the counter always joins the same key
-        # the pop rows carry
-        _quota_key = (
-            (lambda c: registrable_domain(c))
+        # max pages per DOMAIN), so it always joins the key the pop rows
+        # carry.
+        quota_key = (
+            registrable_domain(F.col("host"))
             if self.politeness_grain == "domain"
-            else (lambda c: c)
+            else F.col("host")
         )
+        tpl_key = url_template(F.col("canonical_url"))
+        host_counts = tpl_counts = None
         if max_pages_per_host is not None:
+            host_counts = spark.createDataFrame([], "host string, scheduled long")
             if _resume_state is not None:
-                host_counts = url_seen.groupBy(
-                    _quota_key(F.col("host")).alias("host")
-                ).agg(
-                    F.count(F.lit(1)).alias("scheduled")
-                ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-            else:
-                host_counts = spark.createDataFrame(
-                    [], "host string, scheduled long"
-                )
-        tpl_counts = None  # (template, n) — only when template-guarded
+                host_counts = _fold_counts(host_counts, url_seen, quota_key)
         if self.template_guard_cap is not None:
+            tpl_counts = spark.createDataFrame([], "template string, scheduled long")
             if _resume_state is not None:
-                tpl_counts = url_seen.groupBy(
-                    url_template(F.col("canonical_url")).alias("template")
-                ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-                    eager=True, storageLevel=_SER_LEVEL
-                )
-            else:
-                tpl_counts = spark.createDataFrame([], "template string, n long")
+                tpl_counts = _fold_counts(tpl_counts, url_seen, tpl_key)
         prev_popped = None  # quota no-progress detection
 
         for epoch in range(start_epoch, limit):
@@ -632,17 +644,6 @@ class CrawlEngine:
             if max_pages_per_host is not None and prev_popped == 0:
                 break  # every frontier host is quota-blocked — no progress
 
-            # J1: visited membership — bloom prefilter + exact anti-join.
-            # The bloom only pays once the seen side is large (BLOOM_MIN_SEEN);
-            # below that the exact anti-join alone is cheaper.
-            bloom = (
-                build_bloom(url_seen, "url_hash", expected=max(seen_count, 1))
-                if (self.use_bloom and seen_count >= BLOOM_MIN_SEEN)
-                else None
-            )
-            cand_count = frontier_count
-            new_urls = anti_join_seen(frontier, url_seen, bloom)
-
             # J4: politeness pop — schedule-time budget per host. Budgets
             # attach per-row via broadcast dims (attach_budgets): the old
             # distinct-hosts path shuffled the whole frontier per epoch.
@@ -651,25 +652,25 @@ class CrawlEngine:
                 # registrable domain; original hostname parked in a side
                 # column and restored after the pop (robots/fetch/lineage
                 # never see the mapped value). The grain governs the
-                # max_pages_per_host quota too (counter fold + resume
-                # rebuild below use the same key) — a hostname-keyed
-                # counter joined onto domain-keyed rows would silently
-                # never clamp.
+                # max_pages_per_host quota too (the counter folds by
+                # quota_key) — a hostname-keyed counter joined onto
+                # domain-keyed rows would silently never clamp.
                 domain_grain = self.politeness_grain == "domain"
+                batch = frontier
                 if domain_grain:
-                    new_urls = new_urls.withColumn(
+                    batch = batch.withColumn(
                         "__host_hostgrain", F.col("host")
                     ).withColumn("host", registrable_domain(F.col("host")))
                 if politeness:
                     with_b = attach_budgets(
-                        new_urls,
+                        batch,
                         self.robots,
                         backoff,
                         **({"epoch_seconds": self.epoch_seconds} if self.epoch_seconds else {}),
                     )
                 else:
                     # quota-only mode: unlimited epoch budget, quota clamps
-                    with_b = new_urls.withColumn(
+                    with_b = batch.withColumn(
                         "budget", F.lit(2**31 - 1).cast("int")
                     )
                 if max_pages_per_host is not None:
@@ -686,27 +687,25 @@ class CrawlEngine:
                         )
                         .drop("scheduled")
                     )
-                # Pop impl is a measured choice, not a guess — see the
-                # __init__ docs: twophase wins wall-clock on one box
-                # (exchange = free materialization), threshold wins
-                # shuffled BYTES (wide URL rows never enter an exchange)
-                # and is selected for stored-frontier / real-network runs.
-                if self.pop_impl == "threshold":
-                    # stored mode: the frontier is a bucketed table scan —
-                    # the dual read is two column-pruned scans, so the
-                    # explicit localCheckpoint materialization is skipped
-                    # (the "Iceberg scan = free materialization" claim,
-                    # now actually executed)
+                # The pop follows the frontier's storage (measured, not a
+                # guess). In memory the salted two-phase pop wins wall-clock
+                # on one box (interleaved paired A/B, BENCH/
+                # bench_r3_ab_pairs_postfix.json: median twophase/threshold
+                # 0.51): its exchanges double as the materialization the
+                # popped/deferred dual read needs, where the threshold pop
+                # must pay an explicit localCheckpoint. From a STORED
+                # bucketed table that dual read is two column-pruned scans
+                # (the table IS the materialization), so the threshold pop
+                # runs unmaterialized and its wide URL rows never enter an
+                # exchange — 0.31x the epoch's shuffled bytes (BENCH/
+                # bench_r3_pop_shuffle_bytes.json), the shape for stored
+                # frontiers and real-network shuffles.
+                if self.frontier_store_dir is not None:
                     popped, deferred = pop_per_host_threshold(
-                        with_b,
-                        None,
-                        self.salt_lanes,
-                        materialize=self.frontier_store_dir is None,
+                        with_b, None, materialize=False
                     )
                 else:
-                    popped, deferred = pop_per_host(
-                        with_b, None, self.salt_lanes
-                    )
+                    popped, deferred = pop_per_host(with_b, None)
                 if domain_grain:
                     popped = popped.withColumn(
                         "host", F.col("__host_hostgrain")
@@ -715,7 +714,7 @@ class CrawlEngine:
                         "host", F.col("__host_hostgrain")
                     ).drop("__host_hostgrain")
             else:
-                popped, deferred = new_urls, new_urls.limit(0)
+                popped, deferred = frontier, frontier.limit(0)
             # count rides the checkpoint materialization (no separate job)
             obs_pop = Observation(f"pop_epoch_{epoch}")
             popped = popped.observe(
@@ -744,45 +743,11 @@ class CrawlEngine:
             seen_count += n_popped
             prev_popped = n_popped
 
-            # host-quota accounting: fold this batch's per-host counts into
-            # the |hosts|-row counter (incremental — never re-aggregate the
-            # full url_seen)
-            if max_pages_per_host is not None and n_popped:
-                delta = popped.groupBy(
-                    _quota_key(F.col("host")).alias("host")
-                ).agg(
-                    F.count(F.lit(1)).alias("__d")
-                )
-                host_counts = (
-                    host_counts.join(delta, "host", "full")
-                    .select(
-                        "host",
-                        (
-                            F.coalesce(F.col("scheduled"), F.lit(0))
-                            + F.coalesce(F.col("__d"), F.lit(0))
-                        ).alias("scheduled"),
-                    )
-                    .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                )
-
-            # trap-family accounting: fold this batch's per-family counts
-            # into the |families|-row counter (incremental, like
-            # host_counts)
-            if self.template_guard_cap is not None and n_popped:
-                tdelta = popped.groupBy(
-                    url_template(F.col("canonical_url")).alias("template")
-                ).agg(F.count(F.lit(1)).alias("__d"))
-                tpl_counts = (
-                    tpl_counts.join(tdelta, "template", "full")
-                    .select(
-                        "template",
-                        (
-                            F.coalesce(F.col("n"), F.lit(0))
-                            + F.coalesce(F.col("__d"), F.lit(0))
-                        ).alias("n"),
-                    )
-                    .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                )
+            # host-quota and trap-family accounting
+            if host_counts is not None and n_popped:
+                host_counts = _fold_counts(host_counts, popped, quota_key)
+            if tpl_counts is not None and n_popped:
+                tpl_counts = _fold_counts(tpl_counts, popped, tpl_key)
 
             # mark visited at SCHEDULE time (reference :1000-1004)
             url_seen = url_seen.unionByName(
@@ -914,16 +879,24 @@ class CrawlEngine:
                     tpl_counts.select(
                         "template",
                         (
-                            F.col("n") > F.lit(int(self.template_guard_cap))
+                            F.col("scheduled")
+                            > F.lit(int(self.template_guard_cap))
                         ).alias("exploded"),
                     ),
                 )
-            discovered = anti_join_seen(discovered, url_seen, None)  # J2 exact
+            # J2: the epoch's one URL-seen check. Rows it drops are the
+            # lineage dedup hits; both counts ride the checkpoint job below.
+            obs_cand = Observation(f"cand_epoch_{epoch}")
+            discovered = anti_join_seen(
+                discovered.observe(obs_cand, F.count(F.lit(1)).alias("n")),
+                url_seen,
+            )
             obs_disc = Observation(f"disc_epoch_{epoch}")
             discovered = discovered.observe(
                 obs_disc, F.count(F.lit(1)).alias("n")
             ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
             n_disc = int(obs_disc.get["n"])
+            n_dedup_hits = _observed_count(obs_cand) - n_disc
             discovered = self._assign_seq(discovered, seq_offset, n_rows=n_disc)
             seq_offset += n_disc
 
@@ -973,7 +946,6 @@ class CrawlEngine:
                     frontier_ckpted = True
 
             # S7: lineage metrics — all counts already known, no extra jobs
-            n_dedup_hits = cand_count - (n_popped + n_deferred)
             lineage_parts.append(
                 spark.createDataFrame(
                     [

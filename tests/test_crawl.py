@@ -44,44 +44,6 @@ def test_url_seen_matches_oracle(spark, corpus):
     assert got_fetched == set(want_fetched)
 
 
-def test_pop_impl_knob_engine_identical(spark, corpus):
-    """The engine's pop_impl knob ("twophase" default vs "threshold", the
-    stored-frontier/cluster shape) must be a pure physical choice: same
-    visited set, same (url, depth, seq) tuples, same lineage counters."""
-    seeds = gen_seeds(spark, N)
-    robots = gen_robots(spark)
-    a = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="twophase",
-    ).run(seeds, max_depth=3)
-    b = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="threshold",
-    ).run(seeds, max_depth=3)
-    sa = {(r["canonical_url"], r["depth"], r["seq"]) for r in a.url_seen.collect()}
-    sb = {(r["canonical_url"], r["depth"], r["seq"]) for r in b.url_seen.collect()}
-    assert sa == sb
-    la = [tuple(r) for r in a.lineage.orderBy("epoch").collect()]
-    lb = [tuple(r) for r in b.lineage.orderBy("epoch").collect()]
-    assert la == lb
-    with pytest.raises(ValueError):
-        CrawlEngine(spark, corpus, pop_impl="bogus")
-
-
-def test_bloom_and_exact_paths_agree(spark, corpus):
-    seeds = gen_seeds(spark, N)
-    robots = gen_robots(spark)
-    a = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com", use_bloom=True
-    ).run(seeds, max_depth=3)
-    b = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com", use_bloom=False
-    ).run(seeds, max_depth=3)
-    sa = {(r["canonical_url"], r["depth"], r["seq"]) for r in a.url_seen.collect()}
-    sb = {(r["canonical_url"], r["depth"], r["seq"]) for r in b.url_seen.collect()}
-    assert sa == sb
-
-
 def test_ordering_contract_deterministic(spark, corpus):
     """seq is a total order, stable across runs (SURVEY.md §7.0)."""
     seeds = gen_seeds(spark, N)
@@ -426,6 +388,81 @@ def test_checkpoint_resume_politeness_bit_identical(spark, corpus, tmp_path):
     l1 = sorted(tuple(r) for r in full.lineage.collect())
     l2 = sorted(tuple(r) for r in resumed.lineage.collect())
     assert l1 == l2
+
+
+def test_lineage_dedup_hits_count_seen_discoveries(spark, corpus):
+    """Lineage dedup_hits = the discoveries the URL-seen check (J2) drops
+    because they were already scheduled. The synthetic graph links back
+    into visited pages, so the oracle's per-level count is non-zero."""
+    from mcp_crawl4ai_rag_spark.sources.corpus import py_graph
+
+    res = CrawlEngine(
+        spark, corpus, robots=gen_robots(spark), allowed_host_suffix=".example.com"
+    ).run(gen_seeds(spark, N), max_depth=DEPTH)
+    got = {r["epoch"]: r["dedup_hits"] for r in res.lineage.collect()}
+
+    graph = py_graph(N)
+    url_to_id = {v["url"]: i for i, v in graph.items()}
+    visited, fetched = reference_crawl(N, SEED_IDS, DEPTH)
+    want = {}
+    for d in range(res.epochs_run):
+        # links out of the last level are pruned before the check
+        targets = (
+            {
+                graph[t]["url"]
+                for u, du in fetched
+                if du == d
+                for t in graph[url_to_id[u]]["targets"]
+            }
+            if d < DEPTH - 1
+            else set()
+        )
+        want[d] = len({u for u in targets if visited.get(u, DEPTH) <= d})
+    assert got == want
+    assert sum(want.values()) > 0
+
+
+def test_checkpointed_frontier_disjoint_from_url_seen(spark, corpus, tmp_path):
+    """The invariant that lets the epoch skip a schedule-time URL-seen
+    check: every committed frontier is disjoint from its url_seen — with
+    politeness deferrals, a max_pages cap that squeezes rows out of a
+    popped batch, and redirects all in play."""
+    from mcp_crawl4ai_rag_spark.sources.checkpoint import CheckpointManager
+    from mcp_crawl4ai_rag_spark.sources.corpus import gen_redirects
+
+    seeds = gen_seeds(spark, N)
+
+    def eng(ckpt=None):
+        return CrawlEngine(
+            spark, corpus, robots=gen_robots(spark),
+            allowed_host_suffix=".example.com", epoch_seconds=6.0,
+            redirects=gen_redirects(spark, N), checkpoint_dir=ckpt,
+        )
+
+    # cap strictly inside the last epoch's batch of the uncapped crawl
+    free = eng().run(seeds, max_depth=DEPTH, politeness=True, max_epochs=6)
+    sched = [
+        r["urls_scheduled"] for r in free.lineage.orderBy("epoch").collect()
+    ]
+    assert len(sched) >= 3 and sched[-1] >= 2
+    max_pages = sum(sched[:-1]) + sched[-1] // 2
+
+    ckpt = str(tmp_path / "ck")
+    res = eng(ckpt).run(
+        seeds, max_depth=DEPTH, politeness=True, max_epochs=6, max_pages=max_pages
+    )
+    assert res.url_seen.count() == max_pages
+    assert res.lineage.agg(F.sum("politeness_deferrals")).collect()[0][0] > 0
+    # the capped epoch's frontier holds the squeezed-out rows
+    assert res.frontier_remaining.count() >= sched[-1] - sched[-1] // 2
+
+    mgr = CheckpointManager(spark, ckpt)
+    for epoch in range(mgr.latest_epoch() + 1):
+        frontier, url_seen, _ = mgr.load_epoch(epoch)
+        both = frontier.join(
+            url_seen, ["url_hash", "canonical_url"], "left_semi"
+        ).count()
+        assert both == 0, f"epoch {epoch}: {both} frontier rows already seen"
 
 
 def test_crawl_e2e_gate_pop_respects_pagerank_budgets(spark):
@@ -1060,11 +1097,11 @@ def test_stored_frontier_engine_bit_identical(spark, corpus, tmp_path):
     robots = gen_robots(spark)
     base = CrawlEngine(
         spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="twophase",
+        epoch_seconds=30.0,
     ).run(seeds, max_depth=3, politeness=True)
     stored = CrawlEngine(
         spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="threshold",
+        epoch_seconds=30.0,
         frontier_store_dir=str(tmp_path / "frontier"),
     ).run(seeds, max_depth=3, politeness=True)
     assert stored.epochs_run >= 3, "the stored shape must span >=3 epochs"
@@ -1091,7 +1128,7 @@ def test_stored_frontier_resume_identity(spark, corpus, tmp_path):
     def eng(store, ckpt):
         return CrawlEngine(
             spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-            epoch_seconds=30.0, pop_impl="threshold",
+            epoch_seconds=30.0,
             frontier_store_dir=str(tmp_path / store), checkpoint_dir=str(tmp_path / ckpt),
         )
 
@@ -1126,8 +1163,7 @@ def test_stored_frontier_threshold_pop_zero_exchange(spark, tmp_path):
         F.col("id").alias("seq"),
     )
     eng = CrawlEngine(
-        spark, fr.limit(0), frontier_store_dir=str(tmp_path / "fr"),
-        pop_impl="threshold",
+        spark, fr.limit(0), frontier_store_dir=str(tmp_path / "fr")
     )
     stored = eng._store_frontier(0, fr)
     with_b = stored.withColumn("budget", F.lit(100))
@@ -1152,8 +1188,6 @@ def _hazard_engine(spark, m, tmp_path, store=None, ckpt=None, **over):
     kw = dict(
         robots=HZ.gen_hazard_robots(spark),
         allowed_host_suffix=None,
-        use_bloom=True,
-        pop_impl="threshold",
         politeness_grain="domain",
         epoch_seconds=HZ.HAZ_EPOCH_SECONDS,
         redirects=HZ.gen_hazard_redirects(spark, m),

@@ -117,6 +117,26 @@ def test_sharded_bloom_zero_false_negatives_across_shards():
     assert sb.contains_hashes(others).mean() < 0.03
 
 
+def test_sharded_bloom_probe_sees_in_place_shard_updates():
+    """A shard OR'd in place after a probe must be visible to the next
+    probe — the sharded probe may not answer from a stale bitset copy."""
+    from mcp_crawl4ai_rag_spark.operators.urlseen import ShardedBloom
+
+    S = 4
+    per = BloomFilter.sized_for(100, 0.01)
+    sb = ShardedBloom(
+        shards=[
+            BloomFilter(bits=np.zeros_like(per.bits), m=per.m, k=per.k)
+            for _ in range(S)
+        ],
+        n_shards=S,
+    )
+    h = np.array([123456789], dtype=np.int64)
+    assert not sb.contains_hashes(h)[0]  # empty filter: no bits set
+    sb.shards[int(np.mod(h[0], S))].add_hashes(h)
+    assert sb.contains_hashes(h)[0]
+
+
 def test_sharded_build_probe_and_antijoin(spark):
     from mcp_crawl4ai_rag_spark.operators.urlseen import build_bloom_sharded
 

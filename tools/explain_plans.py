@@ -671,9 +671,7 @@ def main():
     from mcp_crawl4ai_rag_spark.plans.crawl import CrawlEngine as _CE
 
     with tempfile.TemporaryDirectory() as td3:
-        eng_s = _CE(
-            spark, fr.limit(0), frontier_store_dir=td3, pop_impl="threshold"
-        )
+        eng_s = _CE(spark, fr.limit(0), frontier_store_dir=td3)
         stored_b = eng_s._store_frontier(0, fr)
         popped_b, _def_b = pop_per_host_threshold(
             stored_b.withColumn("budget", F.lit(50)), None, materialize=False

@@ -71,9 +71,7 @@ def run_cell(mode: str, n: int) -> dict:
     td = None
     if mode == "stored_threshold":
         td = tempfile.mkdtemp(prefix="stored_pop_witness_")
-        eng = CrawlEngine(
-            spark, fr.limit(0), frontier_store_dir=td, pop_impl="threshold"
-        )
+        eng = CrawlEngine(spark, fr.limit(0), frontier_store_dir=td)
         src = eng._store_frontier(0, fr)
     else:
         src = fr.localCheckpoint(
